@@ -58,43 +58,24 @@ def _verified_names() -> set[str]:
 #: checked prefix. Maintained per round; clear entries once re-verified.
 REVERIFY: frozenset[str] = frozenset(
     {
-        # r16's 15 entries all re-greened in CORRECTNESS_r16 — cleared.
-        # r17 optimization round: plans restructured for performance
-        # (results proven hash-identical to the committed oracles at
-        # sf0.001 AND sf0.01 before landing — see OPTIMIZATION_r17.md),
-        # but the implementation text changed, so the driver re-checks:
-        # size-guarded broadcast hints (runtime-count gates) on the
-        # co-purchase graph family, the soft-dedup attachments, the
-        # linkage gamma attachments (+ equal-name levenshtein
-        # short-circuit) and the link-prediction anti-join/top-K…
-        "q_triangle_count",
-        "q_degree_assortativity",
-        "q_link_prediction",
+        # r17's 22 entries all re-greened in CORRECTNESS_r17 — cleared.
+        # The five graph loops now run through the shared fixpoint
+        # kernel (same per-round plans, one budget rule and one raise
+        # path), so every loop-backed query is re-checked…
+        "q_dup_clusters",
+        "q_dedup_apply",
         "q_soft_dedup_weights",
-        "q_record_linkage",
-        "q_linkage_weights",
-        # …the iterative loops fuse the per-round convergence count
-        # into the (now lazy) checkpoint materialization, and the
-        # Brandes backward pass accumulates per depth slice…
         "q_kcore_decomposition",
         "q_label_propagation",
         "q_harmonic_centrality",
         "q_closeness_eccentricity",
         "q_distance_distribution",
         "q_betweenness_sketch",
-        "q_dup_clusters",
-        "q_dedup_apply",
-        # …and capped_bucket_pairs computes the bucket count and the
-        # chain lead in ONE window pass, touching every LSH pair
-        # consumer.
-        "q_dedup_minhash_lsh",
-        "q_minhash_calibration",
-        "q_lsh_recall_census",
-        "q_dedup_simhash_hamming",
-        "q_domain_dedup_cascade",
-        "q_semantic_dedup",
-        "q_embedding_neardup",
-        "q_curation_pipeline_e2e",
+        # …the chunked link-prediction anti-join gained a size gate…
+        "q_link_prediction",
+        # …and the perceptual-hash dedup consumes the r17
+        # capped_bucket_pairs rewrite but was never on the list.
+        "q_image_phash_dedup",
     }
 )
 

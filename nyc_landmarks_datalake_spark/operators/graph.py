@@ -26,8 +26,9 @@ algorithm a full value-level parity check rather than a rows-only one.
 from __future__ import annotations
 
 import os
+from functools import reduce
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from nyc_landmarks_datalake_spark.functions.bcast import bcast_if
@@ -52,6 +53,60 @@ MAX_ITERS = 20
 AUTO_JUMP_AFTER = 3
 
 
+def fixpoint(
+    state: DataFrame,
+    step,
+    moved,
+    budget: int,
+    what: str,
+    stats: dict | None = None,
+    on_move=None,
+) -> DataFrame:
+    """The one iteration kernel behind every graph loop here: runs
+    ``state = step(state, k)`` for k = 1 … budget + 1 and returns the
+    state of the first round in which nothing moved.
+
+    Budget rule: ``budget`` counts MOVING rounds, with one zero-move
+    confirming round on top — a graph that settles on exactly the
+    budget-th round succeeds, matching the oracles, which unroll the
+    same number of unconditional steps. If round budget + 1 still moved
+    something the kernel RAISES: an unconverged result is silently
+    wrong for everything downstream of a moving row.
+
+    Per round, ``step`` returns a lazy plan; the kernel marks it
+    ``localCheckpoint(eager=False)`` (the lineage cut that keeps plan
+    size flat) and the first action on it is ``filter(moved).count()`` —
+    one job both materializes the round (the narrow filter computes and
+    caches every partition) and counts the movers, where an eager
+    checkpoint would run a separate job ahead of the count. ``moved``
+    is a Column over the round's frame; steps compare against the
+    previous value by carrying it as ``__old``, which the kernel drops
+    after the count (a no-op for steps that do not add it).
+
+    ``on_move(k, state)`` fires after every round that moved something.
+    Pass a dict as ``stats`` to receive ``rounds`` (rounds run) and
+    ``moved`` (movers per round, last entry 0 on convergence)."""
+    per_round: list[int] = []
+    for k in range(1, budget + 2):
+        state = step(state, k).localCheckpoint(eager=False)
+        n_moved = state.filter(moved).count()
+        per_round.append(n_moved)
+        state = state.drop("__old")
+        if stats is not None:
+            stats["rounds"] = len(per_round)
+            stats["moved"] = per_round
+        if n_moved == 0:
+            return state
+        if on_move is not None:
+            on_move(k, state)
+    raise RuntimeError(
+        f"{what}: did not converge within {budget} moving rounds "
+        f"(+1 confirming; {n_moved} rows still moving) — an unconverged "
+        "result is silently wrong; raise the budget (and any oracle "
+        "unroll with it)"
+    )
+
+
 def connected_components(
     pairs: DataFrame,
     max_iters: int = MAX_ITERS,
@@ -73,13 +128,10 @@ def connected_components(
     dedup pipeline, where chains only exist if some band bucket hit
     MAX_BAND_BUCKET.
 
-    Pass a dict as ``stats`` to receive convergence telemetry:
-    ``iterations`` (rounds run) and ``changed`` (labels moved per
-    round, last entry 0 on convergence) — the per-round driver-side
-    ``count()`` already exists for convergence detection, so recording
-    it is free. Tests pin the iteration budget with this."""
-    import warnings
-
+    ``max_iters`` budgets label-moving rounds under the :func:`fixpoint`
+    rule and raises on exhaustion — components wider than the budget
+    would otherwise come back split. ``stats`` receives the kernel's
+    telemetry; tests pin the round count with it."""
     if algorithm not in ("plain", "jump", "auto"):
         raise ValueError(
             f"algorithm must be 'plain', 'jump' or 'auto', got {algorithm!r}"
@@ -94,59 +146,37 @@ def connected_components(
         .withColumn("lbl", F.col("doc"))
         .localCheckpoint()
     )
-    changed = 0  # max_iters=0 skips the loop; 0 suppresses the warning
-    changed_per_round: list[int] = []
-    for it in range(max_iters):
-        jumping = algorithm == "jump" or (
-            algorithm == "auto" and it >= AUTO_JUMP_AFTER
-        )
+
+    def step(labels: DataFrame, k: int) -> DataFrame:
         nbr = (
             edges.join(labels, edges.src == labels.doc)
             .groupBy(F.col("dst").alias("ndoc"))
             .agg(F.min("lbl").alias("nbr_lbl"))
         )
-        # the update carries the previous label alongside so convergence
-        # detection is a filter over the checkpointed frame — no extra
-        # old-vs-new join per round
         upd = labels.join(nbr, labels.doc == nbr.ndoc, "left_outer").select(
             "doc",
             F.col("lbl").alias("__old"),
             F.least(F.col("lbl"), F.coalesce("nbr_lbl", "lbl")).alias("lbl"),
         )
-        if jumping:
+        if algorithm == "jump" or (
+            algorithm == "auto" and k > AUTO_JUMP_AFTER
+        ):
             # label := label-of-label; every label is a vertex id (min
             # over the vertex set), so the inner join is total.
             jump = upd.select(F.col("doc").alias("jdoc"), F.col("lbl").alias("jlbl"))
             upd = upd.join(jump, upd.lbl == jump.jdoc).select(
                 "doc", "__old", F.col("jlbl").alias("lbl")
             )
-        # lazy checkpoint + count fusion (r17, guide §2.4/§5): the
-        # convergence count is the FIRST action on the lazily-marked
-        # frame, so one job both materializes the round's state (every
-        # partition is computed and cached by the narrow filter) and
-        # counts the moved labels — the eager form ran a separate
-        # checkpoint job per round ahead of the count
-        new_labels = upd.localCheckpoint(eager=False)
-        changed = new_labels.filter(F.col("lbl") != F.col("__old")).count()
-        changed_per_round.append(changed)
-        labels = new_labels.drop("__old")
-        if changed == 0:
-            break
-    else:
-        # the loop exhausted max_iters with labels still moving —
-        # components wider than the iteration budget would come back
-        # split. Surface it instead of returning silently-wrong labels.
-        if changed:
-            warnings.warn(
-                f"connected_components did not converge in {max_iters} "
-                f"iterations ({changed} labels still changing); raise "
-                "max_iters or use algorithm='jump' for long-chain graphs",
-                RuntimeWarning,
-                stacklevel=2,
-            )
-    if stats is not None:
-        stats["iterations"] = len(changed_per_round)
-        stats["changed"] = changed_per_round
+        return upd
+
+    labels = fixpoint(
+        labels,
+        step,
+        F.col("lbl") != F.col("__old"),
+        max_iters,
+        "connected_components",
+        stats,
+    )
     return labels.select(
         F.col("doc").alias("doc_id"), F.col("lbl").alias("cluster_id")
     )
@@ -929,16 +959,10 @@ def coreness(
         .withColumn("degree", F.col("core"))
         .localCheckpoint()
     )
-    changed = 0
-    changed_per_round: list[int] = []
-    # max_iters + 1 rounds: ``max_iters`` budgets UPDATES, matching the
-    # oracle's KCORE_ORACLE_ITERS unconditional update steps; the +1
-    # round is the zero-change CONFIRMATION a fixpoint loop needs on
-    # top. Without it a graph converging at exactly the max_iters-th
-    # update would raise here while the oracle's kc{max_iters} is
-    # already the correct fixpoint (r13 ADVICE: the two budgets meant
-    # different numbers of updates).
-    for _ in range(max_iters + 1):
+    # ``max_iters`` budgets UPDATES, matching the oracle's
+    # KCORE_ORACLE_ITERS unconditional update steps; the kernel's
+    # confirming round sits on top
+    def step(cores: DataFrame, k: int) -> DataFrame:
         hist = (
             edges.join(
                 cores.select(
@@ -949,8 +973,6 @@ def coreness(
             .groupBy(F.col("src").alias("node"), "nb_core")
             .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
         )
-        from pyspark.sql import Window
-
         cum = hist.withColumn(
             "cumc",
             F.sum("cnt").over(
@@ -962,30 +984,21 @@ def coreness(
             .cast("long")
             .alias("h")
         )
-        upd = cores.join(h, "node").select(
+        return cores.join(h, "node").select(
             "node",
             "degree",
             F.col("core").alias("__old"),
             F.least(F.col("core"), F.col("h")).alias("core"),
         )
-        # lazy checkpoint + count fusion (r17): one job materializes the
-        # round's cores and counts the movers (see connected_components)
-        new_cores = upd.localCheckpoint(eager=False)
-        changed = new_cores.filter(F.col("core") != F.col("__old")).count()
-        changed_per_round.append(changed)
-        cores = new_cores.drop("__old")
-        if changed == 0:
-            break
-    else:
-        raise RuntimeError(
-            f"coreness did not converge within {max_iters} updates "
-            f"(+1 confirming round; {changed} cores still decreasing); "
-            "raise max_iters — an unconverged decomposition is silently "
-            "wrong everywhere"
-        )
-    if stats is not None:
-        stats["iterations"] = len(changed_per_round)
-        stats["changed"] = changed_per_round
+
+    cores = fixpoint(
+        cores,
+        step,
+        F.col("core") != F.col("__old"),
+        max_iters,
+        "coreness",
+        stats,
+    )
     return cores
 
 
@@ -1057,7 +1070,7 @@ def q_kcore_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
 # committed graph oracle, so it is a deliberate, documented migration,
 # not a tweak.
 #
-# Budgets (the r13 kcore ADVICE discipline): ``max_supersteps`` counts
+# Budgets (the :func:`fixpoint` rule): ``max_supersteps`` counts
 # UPDATING supersteps with a zero-change confirming superstep on top,
 # and the loop RAISES on exhaustion — LPA, unlike the monotone k-core
 # update, has no convergence theorem, so an oscillating run must fail
@@ -1239,31 +1252,16 @@ def lpa_communities(
             .alias("lbl"),
         )
 
-    changed = 0
-    changed_per_step: list[int] = []
-    for _ in range(max_supersteps + 1):
-        # lazy checkpoint + count fusion (r17): one job materializes the
-        # superstep's labels and counts the movers (see
-        # connected_components)
-        stepped = half(
-            half(labels.withColumn("__old", F.col("lbl")), True), False
-        ).localCheckpoint(eager=False)
-        changed = stepped.filter(F.col("lbl") != F.col("__old")).count()
-        changed_per_step.append(changed)
-        labels = stepped.drop("__old")
-        if changed == 0:
-            break
-    else:
-        raise RuntimeError(
-            f"label propagation did not converge within {max_supersteps} "
-            f"supersteps (+1 confirming; {changed} labels still moving) — "
-            "an oscillating run is not a community structure; raise "
-            "max_supersteps or inspect the graph"
-        )
-    if stats is not None:
-        stats["supersteps"] = len(changed_per_step)
-        stats["changed"] = changed_per_step
-    return labels
+    return fixpoint(
+        labels,
+        lambda lbls, k: half(
+            half(lbls.withColumn("__old", F.col("lbl")), True), False
+        ),
+        F.col("lbl") != F.col("__old"),
+        max_supersteps,
+        "label propagation",
+        stats,
+    )
 
 
 @query(
@@ -1350,7 +1348,8 @@ def q_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
 # this operator measured 38 s at sf0.1 — the bitmask form replaces the
 # 16×-expanded frontier join with an E-row aggregate per round.
 #
-# Budget: raises if any mask still grew in round HC_MAX_ROUNDS — a
+# Budget (the :func:`fixpoint` rule): raises if any mask still grew in
+# the confirming round after HC_MAX_ROUNDS growing rounds — a
 # truncated BFS silently under-reports every remaining distance; the
 # committed oracle unrolls exactly the same budget (rounds past
 # exhaustion are no-ops: bit_or of unchanged masks sets no new bits).
@@ -1442,17 +1441,15 @@ def ms_bfs_state(
     and distance_profile (r15 ADVICE: previously triplicated).
 
     ``max_rounds`` budgets GROWING rounds (= the max distance the
-    oracle unroll covers), with one zero-growth confirming round on
-    top — the kcore/LPA budget discipline: a graph whose last bit
-    lands at exactly round max_rounds must succeed, not raise."""
+    oracle unroll covers) under the :func:`fixpoint` rule: a graph
+    whose last bit lands at exactly round max_rounds succeeds, and one
+    still growing after the confirming round raises."""
     edges = edges.localCheckpoint(eager=False)
     nodes = (
         edges.select(F.col("src").alias("node"))
         .distinct()
         .localCheckpoint(eager=False)
     )
-    from pyspark.sql import Window
-
     pivots = (
         nodes.select(
             "node",
@@ -1479,9 +1476,8 @@ def ms_bfs_state(
         )
         .localCheckpoint()
     )
-    grew_per_round: list[int] = []
-    done = False
-    for k in range(1, max_rounds + 2):
+
+    def step(state: DataFrame, k: int) -> DataFrame:
         # only nodes carrying bits can set new ones — at round 1 that's
         # just the pivots, so the filter keeps early rounds tiny
         nb = (
@@ -1494,37 +1490,22 @@ def ms_bfs_state(
             .groupBy(F.col("dst").alias("node"))
             .agg(F.expr("bit_or(mask)").alias("m"))
         )
-        new_state = (
-            state.join(nb, "node", "left")
-            .select(
-                "node",
-                F.col("mask").alias("__old"),
-                F.expr("mask | COALESCE(m, 0)").alias("mask"),
-                *[F.expr(fn(k)).alias(name) for name, fn in accruals],
-            )
-            # lazy checkpoint + count fusion (r17): one job materializes
-            # the round's state and counts the grown masks (see
-            # connected_components)
-            .localCheckpoint(eager=False)
+        return state.join(nb, "node", "left").select(
+            "node",
+            F.col("mask").alias("__old"),
+            F.expr("mask | COALESCE(m, 0)").alias("mask"),
+            *[F.expr(fn(k)).alias(name) for name, fn in accruals],
         )
-        grew = new_state.filter(F.col("mask") != F.col("__old")).count()
-        grew_per_round.append(grew)
-        state = new_state.drop("__old")
-        if grew > 0 and on_grow is not None:
-            on_grow(k, state)
-        if grew == 0:
-            done = True
-            break
-    if not done:
-        raise RuntimeError(
-            f"pivoted MS-BFS masks still growing after {max_rounds} "
-            f"rounds — a truncated {what} under-reports every remaining "
-            "distance; raise max_rounds (and the oracle unroll) together"
-        )
-    if stats is not None:
-        stats["rounds"] = len(grew_per_round)
-        stats["grew"] = grew_per_round
-    return state
+
+    return fixpoint(
+        state,
+        step,
+        F.col("mask") != F.col("__old"),
+        max_rounds,
+        f"{what} (pivoted MS-BFS masks still growing)",
+        stats,
+        on_grow,
+    )
 
 
 def harmonic_sketch(
@@ -1594,8 +1575,8 @@ def q_harmonic_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Identical pivot set (md5 ':pivot' salt, HC_PIVOTS) so the three
 # centralities are directly comparable per node; identical state shape
 # (V rows, one BIGINT mask) and per-round cost (one E-row join + one
-# bit_or hash agg — pivot-count-independent); identical budget
-# discipline (raises if masks still grow at max_rounds; the committed
+# bit_or hash agg — pivot-count-independent); the same :func:`fixpoint`
+# budget (raises if masks still grow past max_rounds; the committed
 # oracle unrolls exactly the budget — rounds past exhaustion set no new
 # bits, so the fixed unroll equals the early-exited loop).
 #
@@ -1807,10 +1788,6 @@ def distance_profile(
     raise-on-exhaustion budget as harmonic/closeness; per-round cost is
     the identical E-row join + bit_or agg plus one lazy 1-row
     SUM(reach) aggregate over the checkpointed state."""
-    from functools import reduce
-
-    from pyspark.sql import Window
-
     spark = edges.sparkSession
     cum_rows = [
         spark.range(1).select(
@@ -1900,8 +1877,8 @@ def q_distance_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
 # deterministic and identical in both engines.
 #
 # Budgets: the forward budget counts GROWING rounds with one
-# empty-frontier confirming round on top (the kcore/LPA/harmonic
-# discipline), and RAISES on exhaustion. The committed oracle unrolls
+# empty-frontier confirming round on top (the :func:`fixpoint` rule),
+# and RAISES on exhaustion. The committed oracle unrolls
 # exactly BW_MAX_ROUNDS forward and backward steps: forward rounds past
 # exhaustion insert nothing, and backward steps at empty levels are
 # no-ops, so the fixed unroll equals the early-exited loop for every
@@ -2026,10 +2003,8 @@ def betweenness_sketch(
     # state.union(new).localCheckpoint() job of the r16 shape is gone
     levels = [state]
     visited = state.select("p", "node")
-    frontier = state
-    sizes: list[int] = []
-    done = False
-    for k in range(1, max_rounds + 2):
+
+    def step(frontier: DataFrame, k: int) -> DataFrame:
         cand = (
             frontier.join(edges, frontier.node == edges.src)
             .groupBy("p", F.col("dst").alias("node"))
@@ -2037,26 +2012,24 @@ def betweenness_sketch(
             .withColumn("d", F.lit(k))
             .select("p", "node", "d", "sigma")
         )
-        # lazy checkpoint + count fusion (r17): one job materializes the
-        # level and counts it (see connected_components)
-        new = cand.join(visited, ["p", "node"], "left_anti").localCheckpoint(
-            eager=False
-        )
-        n_new = new.count()
-        sizes.append(n_new)
-        if n_new == 0:
-            done = True
-            break
+        return cand.join(visited, ["p", "node"], "left_anti")
+
+    def record_level(k: int, new: DataFrame) -> None:
+        nonlocal visited
         levels.append(new)
         visited = visited.union(new.select("p", "node"))
-        frontier = new
-    if not done:
-        raise RuntimeError(
-            f"pivoted Brandes frontier still growing after {max_rounds} "
-            "rounds — a truncated forward pass drops every deeper "
-            "dependency; raise max_rounds (and the oracle unroll) together"
-        )
-    deepest = len(sizes) - 1  # last round added nothing
+
+    # every row of a level is new, so the mover count is the level size
+    fixpoint(
+        state,
+        step,
+        F.lit(True),
+        max_rounds,
+        "betweenness sketch (pivoted Brandes frontier still growing)",
+        stats,
+        record_level,
+    )
+    deepest = len(levels) - 1
     # backward accumulation per depth slice (r17, VERDICT #3): delta of
     # a depth-k node depends ONLY on depth-k rows and the depth-(k+1)
     # deltas, so each step joins level k to level k+1 — the arithmetic
@@ -2105,13 +2078,7 @@ def betweenness_sketch(
             )
             .localCheckpoint(eager=False)
         )
-    from functools import reduce
-
     delta = reduce(lambda x, y: x.union(y), dlevels)
-    if stats is not None:
-        stats["rounds"] = len(sizes)
-        stats["frontier"] = sizes
-        stats["deepest"] = deepest
     agg = (
         delta.filter(F.col("node") != F.col("p"))
         .groupBy("node")
@@ -2433,11 +2400,13 @@ def link_prediction_frame(
             )
         )
     # broadcast the anti-join build side only when it is provably
-    # bounded: chunk-filtered (~E/C rows) or the whole edge list under
-    # LP_BCAST_EDGES (r16 ADVICE: the unchunked hint was unconditional
-    # — the full E-row list at native scale must degrade to a shuffle
-    # anti-join, not bypass the 8 GB broadcast cap)
-    if chunk is not None or n_directed <= LP_BCAST_EDGES:
+    # bounded — at native scale it must degrade to a shuffle anti-join,
+    # not bypass the 8 GB broadcast cap: the whole edge list under
+    # LP_BCAST_EDGES, or a chunk-filtered list gated on und's row
+    # count, an upper bound on the ~E/C rows it keeps
+    if chunk is not None:
+        anti_edges = bcast_if(anti_edges, n_directed // 2)
+    elif n_directed <= LP_BCAST_EDGES:
         anti_edges = F.broadcast(anti_edges)
     cand = pairs.join(anti_edges, ["u", "v"], "left_anti")
     top = cand.orderBy(F.desc("aa_e6"), "u", "v").limit(LP_TOPK)

@@ -28,21 +28,35 @@ def _force_over_threshold(monkeypatch) -> None:
     monkeypatch.setattr(graph_mod, "LP_BCAST_EDGES", 0)
 
 
+def chunked_link_prediction(spark, sf_dir):
+    """One chunk of the native-scale link-prediction path, whose
+    chunk-filtered anti-join side has its own gate."""
+    return graph_mod.link_prediction_frame(spark, sf_dir, chunk=(1, 3))
+
+
 @pytest.mark.parametrize(
-    "name",
+    "build",
     [
-        "q_triangle_count",
-        "q_degree_assortativity",
-        "q_link_prediction",
-        "q_soft_dedup_weights",
-        "q_linkage_weights",
-        "q_record_linkage",
+        *(
+            registry.QUERIES[name]
+            for name in (
+                "q_triangle_count",
+                "q_degree_assortativity",
+                "q_link_prediction",
+                "q_soft_dedup_weights",
+                "q_linkage_weights",
+                "q_record_linkage",
+            )
+        ),
+        chunked_link_prediction,
     ],
+    ids=lambda build: build.__name__,
 )
-def test_over_threshold_fallback_matches(spark, sf_small, monkeypatch, name):
-    ref = _rows(registry.QUERIES[name](spark, sf_small))
+def test_over_threshold_fallback_matches(spark, sf_small, monkeypatch, build):
+    ref = _rows(build(spark, sf_small))
+    assert ref
     _force_over_threshold(monkeypatch)
-    assert _rows(registry.QUERIES[name](spark, sf_small)) == ref
+    assert _rows(build(spark, sf_small)) == ref
 
 
 def test_over_threshold_actually_degrades_to_shuffle_join(

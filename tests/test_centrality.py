@@ -90,7 +90,7 @@ def test_harmonic_budget_counts_growing_rounds(spark):
     stats: dict = {}
     out = harmonic_sketch(edges, n_pivots=1, max_rounds=ecc, stats=stats)
     assert out.count() == 6
-    assert stats["rounds"] == ecc + 1 and stats["grew"][-1] == 0, stats
+    assert stats["rounds"] == ecc + 1 and stats["moved"][-1] == 0, stats
     with pytest.raises(RuntimeError, match="masks still growing"):
         harmonic_sketch(edges, n_pivots=1, max_rounds=ecc - 1)
 
@@ -164,7 +164,7 @@ def test_betweenness_budget_raises(spark):
     stats: dict = {}
     out = betweenness_sketch(edges, n_pivots=1, max_rounds=5, stats=stats)
     assert out.count() == 6
-    assert stats["frontier"][-1] == 0, stats
+    assert stats["moved"][-1] == 0, stats
     with pytest.raises(RuntimeError, match="frontier still growing"):
         betweenness_sketch(edges, n_pivots=1, max_rounds=2)
 
@@ -242,7 +242,7 @@ def test_closeness_budget_and_determinism(spark):
     stats: dict = {}
     out = closeness_sketch(edges, n_pivots=1, max_rounds=ecc, stats=stats)
     rows_a = {r.node: (r.dist_sum, r.eccentricity) for r in out.collect()}
-    assert stats["rounds"] == ecc + 1 and stats["grew"][-1] == 0, stats
+    assert stats["rounds"] == ecc + 1 and stats["moved"][-1] == 0, stats
     # the pivot's own row: reached by no OTHER pivot (n_pivots=1)
     assert rows_a[pivot] == (0, 0)
     # the far end of the path sits at exactly distance ecc

@@ -89,8 +89,8 @@ def test_kcore_convergence_telemetry(spark, sf_small):
     stats: dict = {}
     out = coreness(edges, stats=stats)
     assert out.count() > 0
-    assert stats["changed"][-1] == 0, stats
-    assert stats["iterations"] <= 8, stats  # sf0.001 converges in 2
+    assert stats["moved"][-1] == 0, stats
+    assert stats["rounds"] <= 8, stats  # sf0.001 converges in 2
 
 
 def test_kcore_unconverged_raises(spark):
@@ -326,7 +326,7 @@ def test_kcore_budget_counts_updates(spark):
     stats: dict = {}
     out = coreness(edges, max_iters=3, stats=stats)
     assert {r.core for r in out.collect()} == {1}
-    assert stats["changed"] == [2, 2, 1, 0], stats
+    assert stats["moved"] == [2, 2, 1, 0], stats
     with pytest.raises(RuntimeError, match="did not converge"):
         coreness(edges, max_iters=2)
 

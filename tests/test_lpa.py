@@ -84,8 +84,8 @@ def test_lpa_convergence_telemetry_and_determinism(spark, sf_small):
     edges = fwd.union(fwd.select(F.col("dst").alias("src"), F.col("src")))
     stats: dict = {}
     a = {r.node: r.lbl for r in lpa_communities(edges, stats=stats).collect()}
-    assert stats["changed"][-1] == 0, stats
-    assert stats["supersteps"] <= 6, stats  # sf0.001 converges in 1
+    assert stats["moved"][-1] == 0, stats
+    assert stats["rounds"] <= 6, stats  # sf0.001 converges in 1
     b = {r.node: r.lbl for r in lpa_communities(edges).collect()}
     assert a == b  # rerun is bit-identical: no random tie-breaks
 
