@@ -76,6 +76,24 @@ REVERIFY: frozenset[str] = frozenset(
         # …and the perceptual-hash dedup consumes the r17
         # capped_bucket_pairs rewrite but was never on the list.
         "q_image_phash_dedup",
+        # Every streaming replay now runs through the shared
+        # guard.replay kernel (same staging, sinks and session per
+        # query); the interval joins share one predicate and the
+        # stateful profiles read back through keep_latest.
+        "q_stream_tumbling_replay",
+        "q_stream_sliding_replay",
+        "q_stream_session_replay",
+        "q_stream_interval_join",
+        "q_stream_static_join",
+        "q_stream_semi_join",
+        "q_stream_outer_join",
+        "q_stream_full_outer_join",
+        "q_stream_join_windowed",
+        "q_stream_mv_upsert",
+        "q_stream_ingest_dedup",
+        "q_stream_dedup",
+        "q_stream_dedup_watermarked",
+        "q_stateful_user_profiles",
     }
 )
 

@@ -1,7 +1,9 @@
 """Benchmark harness: runs the headline query set at $SPARK_GRAFT_SF_DIR
-(default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints ONE
-JSON line: {"metric": ..., "value": total_sec, "unit": "sec",
-"queries": {name: sec}, "sf": ...}.
+(default: the sf0.1 test data, see ``main``) on local[$SPARK_GRAFT_CPUS].
+The full record {"metric": ..., "value": total_sec, "unit": "sec",
+"queries": {name: sec}, "sf": ...} goes to BENCH.json; stdout ends with
+the short {"metric", "value", "unit", "n_queries", "sf"} headline line
+(see ``_emit``).
 
 Queries are materialized through the noop sink so the full plan executes
 (count() would let Catalyst prune the computed columns).
@@ -284,55 +286,33 @@ def main() -> None:
             best = min(best, time.time() - t0)
         timings[name] = round(best, 3)
     timings["ingest_csv_silver"] = _bench_ingest(spark, sf_dir)
-    # total = sum of recorded per-query times (NOT the wall across all
-    # reps, which would scale with rep count rather than engine speed)
-    total = round(sum(timings.values()), 3)
-
-    line = json.dumps(
-        {
-            "metric": "headline_query_wall_clock",
-            "value": total,
-            "unit": "sec",
-            "queries": timings,
-            "sf": sf,
-        }
+    _emit(
+        timings,
+        sf,
+        os.path.join(os.path.dirname(os.path.abspath(__file__)), "BENCH.json"),
     )
-    # The JSON line is the contract: emit it first on a clean stdout
-    # (before any teardown chatter), flush, AND persist a copy to
-    # BENCH.json so a truncated/interleaved capture can be recovered.
-    print(line, flush=True)
+
+
+def _emit(timings: dict[str, float], sf: float, path: str) -> None:
+    """The one bench output contract: the full record goes to ``path``
+    (BENCH.json), stdout carries the per-query map in bounded chunk
+    lines and then the short value-bearing headline LAST.
+
+    A consumer that reads the final stdout line gets the total; one
+    that needs the breakdown reads BENCH.json. The chunks (~25 entries,
+    well under 4 KB per line) keep every per-query number whole inside
+    a bounded tail capture — a single ~140-entry line was
+    front-truncated in the past. The total is the sum of the recorded
+    per-query times, not the wall across all reps, which would scale
+    with rep count rather than engine speed.
+    """
+    total = round(sum(timings.values()), 3)
+    head = {"metric": "headline_query_wall_clock", "value": total, "unit": "sec"}
     try:
-        with open(
-            os.path.join(os.path.dirname(os.path.abspath(__file__)), "BENCH.json"),
-            "w",
-        ) as f:
-            f.write(line + "\n")
+        with open(path, "w") as f:
+            f.write(json.dumps({**head, "queries": timings, "sf": sf}) + "\n")
     except OSError:
         pass
-    # The full line above is ~100 entries and can outgrow a bounded
-    # tail capture (BENCH_r08.json recorded "parsed": null). Emit a
-    # SHORT headline summary LAST so the total always lands inside the
-    # captured tail; the full breakdown lives in BENCH.json.
-    print(
-        json.dumps(
-            {
-                "metric": "headline_query_wall_clock",
-                "value": total,
-                "unit": "sec",
-                "n_queries": len(timings),
-                "sf": sf,
-            }
-        ),
-        flush=True,
-    )
-    # r16 PERF lost its per-query comparison because the single giant
-    # per-query line is FRONT-truncated by the driver's bounded tail
-    # capture (PERF_r16: per_query = {}). Re-emit the same map AFTER
-    # the headline in bounded chunks (~25 entries, well under 4 KB per
-    # line) so the captured tail always carries every entry whole; each
-    # chunk is a self-describing JSON line with the same "queries"
-    # shape. Measurement methodology is unchanged — this is output
-    # formatting only (r16 VERDICT "Next round" #5).
     names = list(timings)
     chunk_size = 25
     n_chunks = (len(names) + chunk_size - 1) // chunk_size
@@ -350,6 +330,7 @@ def main() -> None:
             ),
             flush=True,
         )
+    print(json.dumps({**head, "n_queries": len(timings), "sf": sf}), flush=True)
 
 
 if __name__ == "__main__":

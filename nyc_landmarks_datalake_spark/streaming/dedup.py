@@ -7,7 +7,7 @@ of at-least-once ingestion: upstream retries/replays collapse to one
 row downstream.
 
 Replay harness mirrors streaming/stateful.py: the batch table is staged
-to files and streamed with ``maxFilesPerTrigger=1``, so the no-re-emit
+to files and replayed one file per micro-batch, so the no-re-emit
 guarantee is exercised across REAL micro-batch boundaries (a key seen
 in batch 0 must stay suppressed in batch 3 via recovered state, not
 within-batch distinct).
@@ -30,7 +30,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 from nyc_landmarks_datalake_spark.scratch import scratch_dir
-from nyc_landmarks_datalake_spark.streaming.guard import finish_replay, replay_session
+from nyc_landmarks_datalake_spark.streaming.guard import (
+    replay,
+    replay_session,
+    stage,
+)
 
 
 def replay_stream_dedup(
@@ -44,37 +48,19 @@ def replay_stream_dedup(
     ``dropDuplicates(keys)``; return everything emitted. The temp dir
     must outlive the returned lazy DataFrame (OS tmp reaper cleans it —
     never clean up inside a registered query callable)."""
-    import os
-
     base = scratch_dir(prefix="stream_dedup_")
-    src = os.path.join(base, "src")
-    ckpt = os.path.join(base, "ckpt")
-    out = os.path.join(base, "out")
-    rows.repartition(n_source_files).write.mode("overwrite").parquet(src)
-
     # low-state-partition replay clone (stream_join.py discipline):
     # one state-store instance per shuffle partition per stateful
     # operator per micro-batch makes the parent session's 32
     # partitions pure store overhead at replay scale
-    sess = replay_session(spark)
-    stream = (
-        sess.readStream.schema(rows.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
+    out = replay(
+        replay_session(spark),
+        base,
+        [stage(rows, base, "src", n_source_files)],
+        lambda stream: stream.dropDuplicates(keys),
+        "stream_dedup",
+        timeout_s,
     )
-
-    def sink(batch_df: DataFrame, _batch_id: int) -> None:
-        batch_df.write.mode("append").parquet(out)
-
-    q = (
-        stream.dropDuplicates(keys)
-        .writeStream.foreachBatch(sink)
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    finish_replay(q, timeout_s, "stream_dedup")
     return spark.read.parquet(out)
 
 
@@ -102,38 +88,16 @@ def replay_stream_dedup_watermarked(
     the event-time column: first-seen rows carry arbitrary non-key
     columns under arrival-order nondeterminism (same reasoning as
     replay_stream_dedup's key-only projection)."""
-    import os
-
     base = scratch_dir(prefix="stream_dedup_wm_")
-    src = os.path.join(base, "src")
-    ckpt = os.path.join(base, "ckpt")
-    out = os.path.join(base, "out")
-    rows.repartition(n_source_files).write.mode("overwrite").parquet(src)
-
-    # low-state-partition replay clone (stream_join.py discipline):
-    # one state-store instance per shuffle partition per stateful
-    # operator per micro-batch makes the parent session's 32
-    # partitions pure store overhead at replay scale
-    sess = replay_session(spark)
-    stream = (
-        sess.readStream.schema(rows.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
+    out = replay(
+        replay_session(spark),
+        base,
+        [stage(rows, base, "src", n_source_files)],
+        lambda stream: stream.withWatermark(ts_col, delay)
+        .dropDuplicatesWithinWatermark(keys),
+        "stream_dedup",
+        timeout_s,
     )
-
-    def sink(batch_df: DataFrame, _batch_id: int) -> None:
-        batch_df.write.mode("append").parquet(out)
-
-    q = (
-        stream.withWatermark(ts_col, delay)
-        .dropDuplicatesWithinWatermark(keys)
-        .writeStream.foreachBatch(sink)
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    finish_replay(q, timeout_s, "stream_dedup")
     return spark.read.parquet(out)
 
 

@@ -1,13 +1,32 @@
-"""Fail-loud completion guard for finite streaming replays.
+"""The one replay kernel for finite streaming replays.
 
+Every registered streaming query replays a finite batch input through
+the real Structured Streaming engine, one staged file per micro-batch
+— the file-arrival unit of the reference's ingest. :func:`replay` is
+that protocol, written once: each staged ``(path, schema)`` feed is
+read with ``maxFilesPerTrigger=1``, the caller's ``build`` turns the
+streams into the query under test, a ``foreachBatch`` sink writes each
+micro-batch to ``<base>/out`` (or the caller's own sink), and an
+``availableNow`` trigger drains the input and stops.
+
+Completion goes through :func:`finish_replay`, the single raise path:
 ``awaitTermination(timeout)`` returns ``False`` on timeout with the
-query still RUNNING — reading the sink then would return a partial
-mid-replay result (or nothing), a silently-wrong answer. Every replay
-in this package funnels through :func:`finish_replay` so a hung replay
-raises instead.
+query still RUNNING, and reading the sink then would return a partial
+mid-replay result (or nothing) — a silently-wrong answer. A hung
+replay is stopped and raises instead.
+
+:func:`replay_session` hands out the cached low-partition session
+clone that stateful replays run on; :func:`stage` writes a batch input
+as the ``n_files`` parquet parts a replay walks.
 """
 
 from __future__ import annotations
+
+import os
+from typing import TYPE_CHECKING
+
+if TYPE_CHECKING:
+    from pyspark.sql.types import StructType
 
 #: one cached clone per (application, partition count) — replays used
 #: to call ``newSession()`` per invocation, leaking a SessionState (and
@@ -75,3 +94,56 @@ def finish_replay(q, timeout_s: int, zone: str) -> None:
             f"streaming replay ({zone}) did not finish within "
             f"{timeout_s}s; refusing to read a partial result"
         )
+
+
+def stage(df, base: str, name: str, n_files: int) -> tuple[str, StructType]:
+    """Write ``df`` as ``n_files`` parquet parts under ``<base>/<name>``;
+    return the ``(path, schema)`` feed :func:`replay` reads."""
+    path = os.path.join(base, name)
+    df.repartition(n_files).write.mode("overwrite").parquet(path)
+    return path, df.schema
+
+
+def replay(
+    sess,
+    base: str,
+    feeds,
+    build,
+    zone: str,
+    timeout_s: int,
+    output_mode: str = "append",
+    sink=None,
+) -> str:
+    """Replay staged ``feeds`` file-by-file through ``build`` and block
+    until the input is drained; return ``<base>/out``.
+
+    Each ``(path, schema)`` feed becomes a ``sess`` stream with
+    ``maxFilesPerTrigger=1``; ``build(*streams)`` is the streaming
+    query, written through ``foreachBatch`` in ``output_mode`` with its
+    checkpoint at ``<base>/ckpt`` and an ``availableNow`` trigger. The
+    default sink writes each micro-batch to ``<base>/out`` — overwriting
+    in complete mode (the last snapshot is the result), appending
+    otherwise. ``sink(batch_df, batch_id)`` replaces it for replays
+    that commit elsewhere.
+    """
+    out = os.path.join(base, "out")
+    streams = [
+        sess.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(path)
+        for path, schema in feeds
+    ]
+    if sink is None:
+        mode = "overwrite" if output_mode == "complete" else "append"
+
+        def sink(batch_df, _batch_id: int) -> None:
+            batch_df.write.mode(mode).parquet(out)
+
+    q = (
+        build(*streams)
+        .writeStream.foreachBatch(sink)
+        .outputMode(output_mode)
+        .option("checkpointLocation", os.path.join(base, "ckpt"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    finish_replay(q, timeout_s, zone)
+    return out

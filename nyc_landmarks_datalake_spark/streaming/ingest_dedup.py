@@ -38,7 +38,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from nyc_landmarks_datalake_spark.scratch import scratch_dir
-from nyc_landmarks_datalake_spark.streaming.guard import finish_replay
+from nyc_landmarks_datalake_spark.streaming.guard import replay
 
 
 def _band_keys(docs: DataFrame) -> DataFrame:
@@ -94,7 +94,6 @@ def replay_stream_ingest_dedup(
     """
     base = scratch_dir(prefix="stream_ingest_dedup_")
     src = os.path.join(base, "src")
-    ckpt = os.path.join(base, "ckpt")
     store = os.path.join(base, "store")
     out = os.path.join(base, "out")
     staged = docs.select("doc_id", "source", "text")
@@ -163,18 +162,15 @@ def replay_stream_ingest_dedup(
     # parquet side-store), so there is no per-partition state-store
     # overhead to save; the 8-partition clone only throttled the real
     # per-batch minhash/join compute (measured +2.4 s at sf0.1 r16)
-    stream = (
-        spark.readStream.schema(staged.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
+    replay(
+        spark,
+        base,
+        [(src, staged.schema)],
+        lambda stream: stream,
+        "stream_ingest_dedup",
+        timeout_s,
+        sink=tick,
     )
-    q = (
-        stream.writeStream.foreachBatch(tick)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    finish_replay(q, timeout_s, "stream_ingest_dedup")
     return spark.read.parquet(out)
 
 

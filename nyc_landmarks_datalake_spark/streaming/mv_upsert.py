@@ -37,8 +37,9 @@ from pyspark.sql import functions as F
 from nyc_landmarks_datalake_spark.scratch import scratch_dir
 from nyc_landmarks_datalake_spark.sources import txtable
 from nyc_landmarks_datalake_spark.streaming.guard import (
-    finish_replay,
+    replay,
     replay_session,
+    stage,
 )
 
 MV_SCHEMA = "user_id BIGINT, n_events BIGINT, sum_event_ids BIGINT"
@@ -64,10 +65,8 @@ def replay_stream_mv_upsert(
     import os
 
     base = scratch_dir(prefix="stream_mv_")
-    src = os.path.join(base, "events")
+    feed = stage(events, base, "events", n_source_files)
     tbl = os.path.join(base, "mv")
-    ckpt = os.path.join(base, "ckpt")
-    events.repartition(n_source_files).write.mode("overwrite").parquet(src)
 
     sess = replay_session(spark)
     empty = sess.createDataFrame([], MV_SCHEMA)
@@ -102,16 +101,15 @@ def replay_stream_mv_upsert(
         merged = merge_upsert(cur, updated, ["user_id"])
         txtable.commit(sess, tbl, merged, op, base_v)
 
-    q = (
-        sess.readStream.schema(events.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-        .writeStream.foreachBatch(sink)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
+    replay(
+        sess,
+        base,
+        [feed],
+        lambda stream: stream,
+        "stream_mv_upsert",
+        timeout_s,
+        sink=sink,
     )
-    finish_replay(q, timeout_s, "stream_mv_upsert")
     return txtable.read_snapshot(spark, tbl)
 
 

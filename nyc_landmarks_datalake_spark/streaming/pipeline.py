@@ -22,7 +22,7 @@ state store — watermarks bound state size, which is what makes a
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming import StreamingQuery
@@ -119,12 +119,15 @@ def stream_dedup(
     )
 
 
-def stream_static_enrich(events: DataFrame, dim: DataFrame, on: str = "user_id") -> DataFrame:
-    """Stream-static join: each micro-batch joins against the (small)
-    static dimension — planned as a broadcast hash join per batch, no
-    streaming state at all. The canonical enrichment shape (events x
-    user/customer dims) at any scale."""
-    return events.join(F.broadcast(dim), on)
+def stream_static_enrich(
+    events: DataFrame, dim: DataFrame, on: str | Column = "user_id"
+) -> DataFrame:
+    """Stream-static join: each micro-batch joins against the static
+    dimension, planned fresh per batch with no streaming state at all.
+    The canonical enrichment shape (events x user/customer dims). No
+    broadcast hint: the planner broadcasts a dim under the size
+    threshold and shuffles one above it."""
+    return events.join(dim, on)
 
 
 def stream_stream_purchase_attribution(

@@ -2,8 +2,8 @@
 
 Two event feeds (clicks, purchases) joined on user within an event-time
 window, as a REAL Structured Streaming stream-stream join: both sides
-arrive file-by-file (``maxFilesPerTrigger=1``), each keeps keyed state
-in the state store, and matches are emitted as both sides' watermarks
+arrive one staged file per micro-batch, each keeps keyed state in the
+state store, and matches are emitted as both sides' watermarks
 permit — a click in micro-batch 0 must pair with a purchase arriving
 in micro-batch 5 via recovered state, not within-batch luck.
 
@@ -26,14 +26,39 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from nyc_landmarks_datalake_spark.scratch import scratch_dir
 from nyc_landmarks_datalake_spark.streaming.guard import (
-    finish_replay,
+    replay,
     replay_session,
+    stage,
 )
+from nyc_landmarks_datalake_spark.streaming.pipeline import stream_static_enrich
 
 JOIN_WINDOW_HOURS = 6
+
+#: watermark delay on both feeds: beyond the staged data's full
+#: event-time span, so no real row is ever dropped as late
+WM_DELAY = "90 days"
+
+
+def _interval_join(a: DataFrame, b: DataFrame, how: str = "inner") -> DataFrame:
+    """Watermark both feeds by WM_DELAY and join each click to the same
+    user's purchases at most JOIN_WINDOW_HOURS after it — the one
+    interval-join predicate of the inner, outer/semi and join→window
+    replays."""
+    a = a.withWatermark("click_ts", WM_DELAY)
+    b = b.withWatermark("purchase_ts", WM_DELAY)
+    return a.join(
+        b,
+        (a.click_user == b.purchase_user)
+        & F.col("click_ts").between(
+            F.col("purchase_ts") - F.expr(f"INTERVAL {JOIN_WINDOW_HOURS} HOURS"),
+            F.col("purchase_ts"),
+        ),
+        how,
+    )
 
 
 def replay_stream_interval_join(
@@ -46,56 +71,44 @@ def replay_stream_interval_join(
     """Stage both inputs and replay them through a watermarked
     stream-stream interval join; return every emitted pair. Temp dirs
     must outlive the returned lazy DataFrame (OS reaper cleans them)."""
-    import os
-
     base = scratch_dir(prefix="stream_join_")
-    src_a = os.path.join(base, "clicks")
-    src_b = os.path.join(base, "purchases")
-    ckpt = os.path.join(base, "ckpt")
-    out = os.path.join(base, "out")
-    clicks.repartition(n_source_files).write.mode("overwrite").parquet(src_a)
-    purchases.repartition(n_source_files).write.mode("overwrite").parquet(src_b)
-
-    a = (
-        spark.readStream.schema(clicks.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_a)
-        .withWatermark("click_ts", "90 days")
+    feeds = [
+        stage(clicks, base, "clicks", n_source_files),
+        stage(purchases, base, "purchases", n_source_files),
+    ]
+    out = replay(
+        spark,
+        base,
+        feeds,
+        _interval_join,
+        "stream_join",
+        timeout_s,
     )
-    b = (
-        spark.readStream.schema(purchases.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_b)
-        .withWatermark("purchase_ts", "90 days")
-    )
-    joined = a.join(
-        b,
-        (a.click_user == b.purchase_user)
-        & (
-            F.col("click_ts").between(
-                F.col("purchase_ts") - F.expr(f"INTERVAL {JOIN_WINDOW_HOURS} HOURS"),
-                F.col("purchase_ts"),
-            )
-        ),
-    )
-
-    def sink(batch_df: DataFrame, _batch_id: int) -> None:
-        batch_df.write.mode("append").parquet(out)
-
-    q = (
-        joined.writeStream.foreachBatch(sink)
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    finish_replay(q, timeout_s, "stream_join")
     return spark.read.parquet(out)
+
+
+def _click_purchase_feeds(spark, sf_dir: str) -> tuple[DataFrame, DataFrame]:
+    """The two feeds every interval-join query replays: clicks
+    (click_id, click_user, click_ts) and purchases (purchase_id,
+    purchase_user, purchase_ts) from the events table."""
+    from nyc_landmarks_datalake_spark.sources.catalog import table
+
+    ev = table(spark, sf_dir, "events")
+    clicks = ev.filter(F.col("event_type") == "click").select(
+        F.col("event_id").alias("click_id"),
+        F.col("user_id").alias("click_user"),
+        F.col("ts").alias("click_ts"),
+    )
+    purchases = ev.filter(F.col("event_type") == "purchase").select(
+        F.col("event_id").alias("purchase_id"),
+        F.col("user_id").alias("purchase_user"),
+        F.col("ts").alias("purchase_ts"),
+    )
+    return clicks, purchases
 
 
 def _register_queries() -> None:
     from nyc_landmarks_datalake_spark.registry import query
-    from nyc_landmarks_datalake_spark.sources.catalog import table
 
     @query(
         "q_stream_interval_join",
@@ -121,17 +134,7 @@ def _register_queries() -> None:
         """,
     )
     def q_stream_interval_join(spark, sf_dir: str) -> DataFrame:
-        ev = table(spark, sf_dir, "events")
-        clicks = ev.filter(F.col("event_type") == "click").select(
-            F.col("event_id").alias("click_id"),
-            F.col("user_id").alias("click_user"),
-            F.col("ts").alias("click_ts"),
-        )
-        purchases = ev.filter(F.col("event_type") == "purchase").select(
-            F.col("event_id").alias("purchase_id"),
-            F.col("user_id").alias("purchase_user"),
-            F.col("ts").alias("purchase_ts"),
-        )
+        clicks, purchases = _click_purchase_feeds(spark, sf_dir)
         pairs = replay_stream_interval_join(spark, clicks, purchases)
         return pairs.groupBy(F.col("click_user").alias("user_id")).agg(
             F.count(F.lit(1)).alias("n_pairs"),
@@ -157,32 +160,15 @@ def replay_stream_static_join(
     scale); an inner equi-join emits each enriched row exactly once
     regardless of arrival order, which is what makes the replay
     oracle-checkable."""
-    import os
-
     base = scratch_dir(prefix="stream_static_")
-    src = os.path.join(base, "src")
-    ckpt = os.path.join(base, "ckpt")
-    out = os.path.join(base, "out")
-    stream_rows.repartition(n_source_files).write.mode("overwrite").parquet(src)
-
-    stream = (
-        spark.readStream.schema(stream_rows.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
+    out = replay(
+        spark,
+        base,
+        [stage(stream_rows, base, "src", n_source_files)],
+        lambda stream: stream_static_enrich(stream, static_dim, on),
+        "stream_static",
+        timeout_s,
     )
-    joined = stream.join(static_dim, on)
-
-    def sink(batch_df: DataFrame, _batch_id: int) -> None:
-        batch_df.write.mode("append").parquet(out)
-
-    q = (
-        joined.writeStream.foreachBatch(sink)
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    finish_replay(q, timeout_s, "stream_static")
     return spark.read.parquet(out)
 
 
@@ -240,7 +226,6 @@ _register_static_join()
 #: beyond every real ts + watermark delay + join window at any sf
 #: (events span a fixed 30-day window from 2024-01-01 at every scale)
 OUTER_FLUSH_TS = "2025-06-01 00:00:00"
-OUTER_WM_DELAY = "90 days"
 
 
 def _stage_feeds_with_flush(
@@ -250,7 +235,7 @@ def _stage_feeds_with_flush(
     purchases: DataFrame,
     n_source_files: int,
     n_flush_files: int = 1,
-) -> tuple[str, str]:
+) -> list[tuple[str, T.StructType]]:
     """Stage both feeds as parquet plus ``n_flush_files`` far-future
     flush sentinels each, mtime-ordered so sentinels replay strictly
     LAST (and strictly in order among themselves).
@@ -273,10 +258,11 @@ def _stage_feeds_with_flush(
     import os
     import time as _time
 
-    src_a = os.path.join(base, "clicks")
-    src_b = os.path.join(base, "purchases")
-    clicks.repartition(n_source_files).write.mode("overwrite").parquet(src_a)
-    purchases.repartition(n_source_files).write.mode("overwrite").parquet(src_b)
+    feeds = [
+        stage(clicks, base, "clicks", n_source_files),
+        stage(purchases, base, "purchases", n_source_files),
+    ]
+    (src_a, _), (src_b, _) = feeds
 
     data_cutoff = _time.time()
     for k in range(n_flush_files):
@@ -309,7 +295,7 @@ def _stage_feeds_with_flush(
             assert new, f"sentinel write produced no new part file in {d}"
             for f in new:
                 os.utime(os.path.join(d, f), (stamp, stamp))
-    return src_a, src_b
+    return feeds
 
 
 def replay_stream_outer_join(
@@ -343,55 +329,20 @@ def replay_stream_outer_join(
     timestamp, so they match EACH OTHER and never surface as null
     rows; the sentinel filter drops matched and null-side sentinel
     rows alike."""
-    import os
-
     base = scratch_dir(prefix="stream_ojoin_")
-    ckpt = os.path.join(base, "ckpt")
-    out = os.path.join(base, "out")
-    src_a, src_b = _stage_feeds_with_flush(
-        spark, base, clicks, purchases, n_source_files
-    )
-
+    feeds = _stage_feeds_with_flush(spark, base, clicks, purchases, n_source_files)
     # run the stateful replay in a dedicated low-partition session:
     # two state stores x 32 partitions of store-provider overhead was
     # ~9% of the whole sf0.1 bench for a few thousand rows; the staged
     # parquet handoff keeps the caller's session untouched
-    sess = replay_session(spark)
-    a = (
-        sess.readStream.schema(clicks.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_a)
-        .withWatermark("click_ts", OUTER_WM_DELAY)
+    out = replay(
+        replay_session(spark),
+        base,
+        feeds,
+        lambda a, b: _interval_join(a, b, how),
+        "stream_outer_join",
+        timeout_s,
     )
-    b = (
-        sess.readStream.schema(purchases.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_b)
-        .withWatermark("purchase_ts", OUTER_WM_DELAY)
-    )
-    joined = a.join(
-        b,
-        (a.click_user == b.purchase_user)
-        & (
-            F.col("click_ts").between(
-                F.col("purchase_ts") - F.expr(f"INTERVAL {JOIN_WINDOW_HOURS} HOURS"),
-                F.col("purchase_ts"),
-            )
-        ),
-        how,
-    )
-
-    def sink(batch_df: DataFrame, _batch_id: int) -> None:
-        batch_df.write.mode("append").parquet(out)
-
-    q = (
-        joined.writeStream.foreachBatch(sink)
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    finish_replay(q, timeout_s, "stream_outer_join")
     rows = spark.read.parquet(out)
     if how == "fullOuter":
         return rows.filter(
@@ -404,7 +355,6 @@ def replay_stream_outer_join(
 
 def _register_semi_join() -> None:
     from nyc_landmarks_datalake_spark.registry import query
-    from nyc_landmarks_datalake_spark.sources.catalog import table
 
     @query(
         "q_stream_semi_join",
@@ -439,17 +389,7 @@ def _register_semi_join() -> None:
         deduplicating multi-match emissions. Same replay machinery and
         flush sentinel as the outer joins; emission set equals the
         batch semi join (delay > data span)."""
-        ev = table(spark, sf_dir, "events")
-        clicks = ev.filter(F.col("event_type") == "click").select(
-            F.col("event_id").alias("click_id"),
-            F.col("user_id").alias("click_user"),
-            F.col("ts").alias("click_ts"),
-        )
-        purchases = ev.filter(F.col("event_type") == "purchase").select(
-            F.col("event_id").alias("purchase_id"),
-            F.col("user_id").alias("purchase_user"),
-            F.col("ts").alias("purchase_ts"),
-        )
+        clicks, purchases = _click_purchase_feeds(spark, sf_dir)
         rows = replay_stream_outer_join(
             spark, clicks, purchases, how="leftSemi"
         )
@@ -464,7 +404,6 @@ _register_semi_join()
 
 def _register_outer_join() -> None:
     from nyc_landmarks_datalake_spark.registry import query
-    from nyc_landmarks_datalake_spark.sources.catalog import table
 
     @query(
         "q_stream_outer_join",
@@ -493,17 +432,7 @@ def _register_outer_join() -> None:
         """,
     )
     def q_stream_outer_join(spark, sf_dir: str) -> DataFrame:
-        ev = table(spark, sf_dir, "events")
-        clicks = ev.filter(F.col("event_type") == "click").select(
-            F.col("event_id").alias("click_id"),
-            F.col("user_id").alias("click_user"),
-            F.col("ts").alias("click_ts"),
-        )
-        purchases = ev.filter(F.col("event_type") == "purchase").select(
-            F.col("event_id").alias("purchase_id"),
-            F.col("user_id").alias("purchase_user"),
-            F.col("ts").alias("purchase_ts"),
-        )
+        clicks, purchases = _click_purchase_feeds(spark, sf_dir)
         rows = replay_stream_outer_join(spark, clicks, purchases)
         return rows.groupBy(F.col("click_user").alias("user_id")).agg(
             F.count(F.lit(1)).cast("long").alias("n_rows"),
@@ -523,7 +452,6 @@ _register_outer_join()
 
 def _register_full_outer_join() -> None:
     from nyc_landmarks_datalake_spark.registry import query
-    from nyc_landmarks_datalake_spark.sources.catalog import table
 
     @query(
         "q_stream_full_outer_join",
@@ -565,17 +493,7 @@ def _register_full_outer_join() -> None:
         sentinel, and dedicated low-partition session. The emission set
         of the finite replay equals the batch FULL JOIN exactly (delay >
         data span, so nothing drops late)."""
-        ev = table(spark, sf_dir, "events")
-        clicks = ev.filter(F.col("event_type") == "click").select(
-            F.col("event_id").alias("click_id"),
-            F.col("user_id").alias("click_user"),
-            F.col("ts").alias("click_ts"),
-        )
-        purchases = ev.filter(F.col("event_type") == "purchase").select(
-            F.col("event_id").alias("purchase_id"),
-            F.col("user_id").alias("purchase_user"),
-            F.col("ts").alias("purchase_ts"),
-        )
+        clicks, purchases = _click_purchase_feeds(spark, sf_dir)
         rows = replay_stream_outer_join(
             spark, clicks, purchases, how="fullOuter"
         )
@@ -650,69 +568,33 @@ def replay_stream_join_windowed(
     withholding every trailing window (found empirically; the
     single-operator outer-join replay is immune because it filters
     sentinels AFTER the replay)."""
-    import os
-
     base = scratch_dir(prefix="stream_jwin_")
-    ckpt = os.path.join(base, "ckpt")
-    out = os.path.join(base, "out")
     # two flush sentinels per feed: the first drains the JOIN's state,
     # the second batch carries the advanced watermark down to the
     # WINDOW operator (each stateful level sees the watermark as of
     # the previous micro-batch)
-    src_a, src_b = _stage_feeds_with_flush(
+    feeds = _stage_feeds_with_flush(
         spark, base, clicks, purchases, n_source_files, n_flush_files=2
     )
-
-    sess = replay_session(spark)
-    a = (
-        sess.readStream.schema(clicks.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_a)
-        .withWatermark("click_ts", OUTER_WM_DELAY)
-    )
-    b = (
-        sess.readStream.schema(purchases.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_b)
-        .withWatermark("purchase_ts", OUTER_WM_DELAY)
-    )
-    agged = (
-        a.join(
-            b,
-            (a.click_user == b.purchase_user)
-            & (
-                F.col("click_ts").between(
-                    F.col("purchase_ts")
-                    - F.expr(f"INTERVAL {JOIN_WINDOW_HOURS} HOURS"),
-                    F.col("purchase_ts"),
-                )
-            ),
-        )
+    out = replay(
+        replay_session(spark),
+        base,
+        feeds,
+        lambda a, b: _interval_join(a, b)
         .groupBy(F.window("purchase_ts", "1 day").alias("w"))
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_pairs"),
             F.sum("click_id").cast("long").alias("sum_click_ids"),
             F.sum("purchase_id").cast("long").alias("sum_purchase_ids"),
-        )
+        ),
+        "stream_join_windowed",
+        timeout_s,
     )
-
-    def sink(batch_df: DataFrame, _batch_id: int) -> None:
-        batch_df.write.mode("append").parquet(out)
-
-    q = (
-        agged.writeStream.foreachBatch(sink)
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    finish_replay(q, timeout_s, "stream_join_windowed")
     return spark.read.parquet(out)
 
 
 def _register_join_windowed() -> None:
     from nyc_landmarks_datalake_spark.registry import query
-    from nyc_landmarks_datalake_spark.sources.catalog import table
 
     @query(
         "q_stream_join_windowed",
@@ -742,17 +624,7 @@ def _register_join_windowed() -> None:
         """,
     )
     def q_stream_join_windowed(spark, sf_dir: str) -> DataFrame:
-        ev = table(spark, sf_dir, "events")
-        clicks = ev.filter(F.col("event_type") == "click").select(
-            F.col("event_id").alias("click_id"),
-            F.col("user_id").alias("click_user"),
-            F.col("ts").alias("click_ts"),
-        )
-        purchases = ev.filter(F.col("event_type") == "purchase").select(
-            F.col("event_id").alias("purchase_id"),
-            F.col("user_id").alias("purchase_user"),
-            F.col("ts").alias("purchase_ts"),
-        )
+        clicks, purchases = _click_purchase_feeds(spark, sf_dir)
         rows = replay_stream_join_windowed(spark, clicks, purchases)
         return rows.select(
             F.col("w.start").alias("window_start"),

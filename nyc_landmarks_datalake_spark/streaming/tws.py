@@ -13,20 +13,21 @@ exists; :func:`tws_available` gates it, tests skip cleanly, and the
 equivalent applyInPandasWithState operator (streaming/stateful.py,
 driver-checked green) covers the semantics in-container.
 
-Cross-check story once runnable: ``replay_user_stats`` is the same
-eager availableNow/maxFilesPerTrigger=1 pattern as
-stateful.replay_user_profiles, and the processor computes the same
-integer-exact per-user aggregate — so its oracle is the identical
-plain GROUP BY.
+Cross-check story once runnable: ``replay_user_stats`` runs through the
+same ``guard.replay`` kernel as stateful.replay_user_profiles (one
+staged file per micro-batch, update mode, latest row per user), and
+the processor computes the same integer-exact per-user aggregate — so
+its oracle is the identical plain GROUP BY.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-
-from nyc_landmarks_datalake_spark.scratch import scratch_dir
-from nyc_landmarks_datalake_spark.streaming.guard import finish_replay
 from pyspark.sql import types as T
+
+from nyc_landmarks_datalake_spark.operators.merge import keep_latest
+from nyc_landmarks_datalake_spark.scratch import scratch_dir
+from nyc_landmarks_datalake_spark.streaming.guard import replay, stage
 
 
 def tws_available() -> bool:
@@ -127,55 +128,29 @@ def replay_user_stats(
             "state-server transport; not installed in this sandbox "
             "(see streaming/tws.py docstring)"
         )
-    import os
-
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
     base = scratch_dir(prefix="tws_stats_")
-    src = os.path.join(base, "src")
-    ckpt = os.path.join(base, "ckpt")
-    out = os.path.join(base, "out")
-    events.repartition(n_source_files).write.mode("overwrite").parquet(src)
-
-    stream = (
-        spark.readStream.schema(events.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-
-    def sink(batch_df: DataFrame, _batch_id: int) -> None:
-        batch_df.write.mode("append").parquet(out)
-
+    feed = stage(events, base, "src", n_source_files)
     conf_key = "spark.sql.streaming.stateStore.providerClass"
     prev = spark.conf.get(conf_key, None)
     spark.conf.set(conf_key, _ROCKSDB)
     try:
-        q = (
-            stream.groupBy("user_id")
-            .transformWithStateInPandas(
+        out = replay(
+            spark,
+            base,
+            [feed],
+            lambda stream: stream.groupBy("user_id").transformWithStateInPandas(
                 _make_processor(),
                 outputStructType=OUT_SCHEMA,
                 outputMode="Update",
                 timeMode="None",
-            )
-            .writeStream.foreachBatch(sink)
-            .outputMode("update")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
+            ),
+            "tws_stats",
+            timeout_s,
+            output_mode="update",
         )
-        finish_replay(q, timeout_s, "tws_stats")
     finally:
         if prev is None:
             spark.conf.unset(conf_key)
         else:
             spark.conf.set(conf_key, prev)
-
-    emitted = spark.read.parquet(out)
-    w = Window.partitionBy("user_id").orderBy(F.desc("n_events"))
-    return (
-        emitted.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .drop("rn")
-    )
+    return keep_latest(spark.read.parquet(out), ["user_id"], ["n_events"])

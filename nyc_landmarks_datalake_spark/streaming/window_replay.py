@@ -25,7 +25,11 @@ import os
 import shutil
 
 from nyc_landmarks_datalake_spark.scratch import scratch_dir
-from nyc_landmarks_datalake_spark.streaming.guard import replay_session
+from nyc_landmarks_datalake_spark.streaming.guard import (
+    replay,
+    replay_session,
+    stage,
+)
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -55,14 +59,14 @@ def replay_stream_agg(
     through a streaming ``groupBy(*group_cols)`` count + decimal-sum
     aggregate; return the final complete-mode snapshot.
 
-    One replay protocol for every streaming-replay query (tumbling,
-    sliding, session): readStream with maxFilesPerTrigger=1 so each
-    staged file is its own micro-batch, complete-mode foreachBatch
-    overwrite sink, availableNow trigger. The returned snapshot is
-    EAGERLY materialized (``localCheckpoint``) so it stays readable no
-    matter how many later invocations rotate the two-version staging
-    retention underneath it — snapshots are tiny aggregates, so pinning
-    their blocks costs nothing next to the replay itself.
+    One replay for every windowed streaming query (tumbling, sliding,
+    session), run by :func:`guard.replay` in complete mode: each staged
+    file is its own micro-batch and the overwrite sink keeps the last
+    snapshot. The returned snapshot is EAGERLY materialized
+    (``localCheckpoint``) so it stays readable no matter how many later
+    invocations rotate the two-version staging retention underneath it
+    — snapshots are tiny aggregates, so pinning their blocks costs
+    nothing next to the replay itself.
     """
     root, version = _REPLAY_ZONES.get(zone) or (
         scratch_dir(prefix=f"{zone}_"),
@@ -70,10 +74,7 @@ def replay_stream_agg(
     )
     _REPLAY_ZONES[zone] = (root, version + 1)
     base = os.path.join(root, f"v{version}")
-    src = os.path.join(base, "src")
-    ckpt = os.path.join(base, "ckpt")
-    out = os.path.join(base, "out")
-    rows.repartition(n_source_files).write.mode("overwrite").parquet(src)
+    feed = stage(rows, base, "src", n_source_files)
     for stale in range(version - 1):
         shutil.rmtree(os.path.join(root, f"v{stale}"), ignore_errors=True)
 
@@ -81,37 +82,18 @@ def replay_stream_agg(
     # state-store instance per shuffle partition per micro-batch, so
     # the parent's 32 partitions are pure store-provider overhead at
     # replay scale (the stream_join.py discipline, completed r16)
-    sess = replay_session(spark)
-    stream = (
-        sess.readStream.schema(rows.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
+    out = replay(
+        replay_session(spark),
+        base,
+        [feed],
+        lambda stream: stream.groupBy(*group_cols).agg(
+            F.count(F.lit(1)).alias("n_events"),
+            F.sum(F.col("value").cast("decimal(30,6)")).alias("dec_total"),
+        ),
+        zone,
+        timeout_s,
+        output_mode="complete",
     )
-    agg = stream.groupBy(*group_cols).agg(
-        F.count(F.lit(1)).alias("n_events"),
-        F.sum(F.col("value").cast("decimal(30,6)")).alias("dec_total"),
-    )
-
-    def sink(batch_df: DataFrame, _batch_id: int) -> None:
-        batch_df.write.mode("overwrite").parquet(out)
-
-    q = (
-        agg.writeStream.foreachBatch(sink)
-        .outputMode("complete")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    # awaitTermination(timeout) returns False on timeout with the query
-    # still RUNNING — reading ``out`` then would return a partial
-    # mid-replay snapshot (or nothing), a silently-wrong result. Fail
-    # loudly instead; stop() so the orphan doesn't keep writing.
-    if not q.awaitTermination(timeout_s):
-        q.stop()
-        raise RuntimeError(
-            f"streaming replay ({zone}) did not finish within "
-            f"{timeout_s}s; refusing to read a partial snapshot"
-        )
     return spark.read.parquet(out).localCheckpoint(eager=True)
 
 
@@ -239,7 +221,7 @@ def _register_session() -> None:
         sessions that a later file's bridging event fuses into one, so
         the final complete-mode snapshot proves cross-batch session
         merge, not just windowed accumulation. Events arrive in
-        3 arbitrary file-order batches (maxFilesPerTrigger=1) and the
+        3 arbitrary file-order batches (one file per micro-batch) and the
         result must still equal the batch gaps-and-islands oracle
         bit-exactly (decimal state sums — order-independent)."""
         ev = table(spark, sf_dir, "events").select(

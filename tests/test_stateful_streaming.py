@@ -6,6 +6,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from nyc_landmarks_datalake_spark.sources.catalog import table
+from nyc_landmarks_datalake_spark.streaming.guard import finish_replay
 from nyc_landmarks_datalake_spark.streaming.stateful import user_profiles
 
 
@@ -23,7 +24,7 @@ def _run_batchfile(spark, src_dir, ckpt, out_dir, schema):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(180)
+    finish_replay(q, 180, "test_state_accumulates_across_batches")
     return spark.read.parquet(out_dir).toPandas()
 
 

@@ -13,6 +13,7 @@ from pyspark.sql import types as T
 
 from nyc_landmarks_datalake_spark.schema.sidecar import parse_sidecar
 from nyc_landmarks_datalake_spark.sources.catalog import table
+from nyc_landmarks_datalake_spark.streaming.guard import finish_replay
 from nyc_landmarks_datalake_spark.streaming.pipeline import (
     sessionized_stream,
     stream_dedup,
@@ -42,7 +43,7 @@ def test_stream_ingest_file_source(spark, tmp_path):
         str(tmp_path / "ckpt"),
         partition_cols=["zone"],
     )
-    q.awaitTermination(120)
+    finish_replay(q, 120, "test_stream_ingest_file_source")
     back = spark.read.parquet(str(dest))
     assert back.count() == 3
     assert {r["name"] for r in back.collect()} == {"alpha", "beta", "gamma, g"}
@@ -54,7 +55,7 @@ def test_stream_ingest_file_source(spark, tmp_path):
         spark, str(raw), schema, str(dest), str(tmp_path / "ckpt"),
         partition_cols=["zone"],
     )
-    q2.awaitTermination(120)
+    finish_replay(q2, 120, "test_stream_ingest_file_source")
     assert spark.read.parquet(str(dest)).count() == 4
 
 
@@ -66,7 +67,7 @@ def _run_stream_to_memory(spark, df, name, output_mode="append"):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(180)
+    finish_replay(q, 180, name)
     return spark.sql(f"SELECT * FROM {name}")
 
 
@@ -218,7 +219,7 @@ def test_stream_upsert_sink(spark, tmp_path):
         spark.readStream.schema(schema).parquet(str(src / "*")),
         dest, ckpt, keys=["user_id"], order_cols=["ts"],
     )
-    q.awaitTermination(120)
+    finish_replay(q, 120, "test_stream_upsert_sink")
     got = {r["user_id"]: r["value"] for r in spark.read.parquet(dest).collect()}
     assert got == {1: 1.0, 2: 2.0}
 
@@ -230,7 +231,7 @@ def test_stream_upsert_sink(spark, tmp_path):
         spark.readStream.schema(schema).parquet(str(src / "*")),
         dest, ckpt, keys=["user_id"], order_cols=["ts"],
     )
-    q2.awaitTermination(120)
+    finish_replay(q2, 120, "test_stream_upsert_sink")
     got = {r["user_id"]: r["value"] for r in spark.read.parquet(dest).collect()}
     assert got == {1: 10.0, 2: 2.0, 3: 3.0}
 
@@ -249,7 +250,7 @@ def test_stream_upsert_sink(spark, tmp_path):
         spark.readStream.schema(schema).parquet(str(src / "*")),
         dest, ckpt, keys=["user_id"], order_cols=["ts"],
     )
-    q3.awaitTermination(120)
+    finish_replay(q3, 120, "test_stream_upsert_sink")
     got = {r["user_id"]: r["value"] for r in spark.read.parquet(dest).collect()}
     assert got == {1: 10.0, 2: 2.0, 3: 3.0, 4: 4.0}
 
@@ -265,7 +266,7 @@ def test_stream_upsert_sink(spark, tmp_path):
         spark.readStream.schema(schema).parquet(str(src / "*")),
         dest, ckpt, keys=["user_id"], order_cols=["ts"],
     )
-    q4.awaitTermination(120)
+    finish_replay(q4, 120, "test_stream_upsert_sink")
     got = {r["user_id"]: r["value"] for r in spark.read.parquet(dest).collect()}
     assert got == {1: 10.0, 2: 2.0, 3: 3.0, 4: 4.0, 5: 5.0}
 
@@ -374,7 +375,7 @@ def test_late_data_dropped_across_checkpointed_restarts(spark, tmp_path):
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination(180)
+        finish_replay(q, 180, "test_late_data")
 
     # run 1: two events in the 10:00 window; 13:00 advances the
     # watermark to 12:30, closing and emitting the 10:00 window
@@ -709,3 +710,25 @@ def test_replay_session_cache_revalidates(monkeypatch):
     s2 = guard.replay_session(FakeSession(ctx2), 8)
     assert s2 is not s1
     assert s2.sparkContext is ctx2
+
+
+def test_finish_replay_stops_and_raises_on_timeout():
+    """The single timeout path every replay (and every streaming test)
+    goes through: a query whose ``awaitTermination`` returns False is
+    stopped and the caller gets a RuntimeError, never a partial sink."""
+    from nyc_landmarks_datalake_spark.streaming import guard
+
+    class HungQuery:
+        stopped = False
+
+        def awaitTermination(self, timeout):
+            self.timeout = timeout
+            return False
+
+        def stop(self):
+            self.stopped = True
+
+    q = HungQuery()
+    with pytest.raises(RuntimeError, match="refusing to read a partial"):
+        guard.finish_replay(q, 7, "hung_zone")
+    assert q.stopped and q.timeout == 7

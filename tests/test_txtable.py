@@ -9,6 +9,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from nyc_landmarks_datalake_spark.sources import txtable
+from nyc_landmarks_datalake_spark.streaming.guard import finish_replay
 
 
 def _mk(spark, n, tag):
@@ -120,7 +121,7 @@ def test_streaming_upsert_sink_commits_per_batch(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(180)
+    finish_replay(q, 180, "test_streaming_upsert_sink_commits_per_batch")
     got = {r["k"]: r["tag"] for r in txtable.read_snapshot(spark, path).collect()}
     assert got == {1: "old", 2: "new", 3: "new", 4: "new", 5: "new"}
     # one commit per non-empty micro-batch on top of v0

@@ -43,7 +43,7 @@ def _run(cmd: list[str], cwd: str) -> str:
 
 
 def _bench(tree: str, label: str) -> dict:
-    """Run `python bench.py` in ``tree`` and parse its one JSON line."""
+    """Run `python bench.py` in ``tree`` and read the record it writes."""
     t0 = time.time()
     proc = subprocess.run(
         [sys.executable, "bench.py"],
@@ -56,23 +56,14 @@ def _bench(tree: str, label: str) -> dict:
         raise RuntimeError(
             f"bench.py failed in {tree}: {proc.stderr[-2000:]}"
         )
-    # bench.py prints the full JSON line first and a SHORT summary line
-    # last (so bounded tail captures keep the total) — take the line
-    # that carries the per-query breakdown, falling back to the copy
-    # bench.py persists to <tree>/BENCH.json.
-    lines = [
-        ln for ln in proc.stdout.splitlines() if ln.strip().startswith("{")
-    ]
-    # r17: bench.py additionally re-emits the per-query map in bounded
-    # chunk lines AFTER the headline (tail-survivability for the
-    # driver's capture); those carry "queries" but no "value", so
-    # select on both keys to keep taking the one full contract line.
-    full = [ln for ln in lines if '"queries"' in ln and '"value"' in ln]
-    if full:
-        out = json.loads(full[-1])
-    else:
-        with open(os.path.join(tree, "BENCH.json")) as f:
-            out = json.load(f)
+    # bench.py writes its full record (every per-query time) to
+    # <tree>/BENCH.json; stdout only carries chunks and the headline.
+    # A file older than this run is a previous bench's, never this one.
+    path = os.path.join(tree, "BENCH.json")
+    if os.path.getmtime(path) < t0:
+        raise RuntimeError(f"bench.py in {tree} did not rewrite {path}")
+    with open(path) as f:
+        out = json.load(f)
     print(
         f"[{time.strftime('%H:%M:%S')}] {label}: {out['value']:.1f}s "
         f"over {len(out.get('queries', {}))} queries "
