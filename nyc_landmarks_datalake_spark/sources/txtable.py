@@ -15,7 +15,10 @@ Each commit file is the FULL manifest of the snapshot at that version
 (data file list + schema fingerprint + operation name + parent
 version). Readers list ``_txlog``, take the highest version, and read
 exactly the files it names — a half-written data directory is invisible
-because nothing references it (snapshot isolation). Writers stage data
+because nothing references it (snapshot isolation). Readers also take
+the schema from the manifest, never from the data files' footers, so
+building a snapshot starts no Spark job: the log, not the data, is the
+source of truth for schema, as in Delta. Writers stage data
 files first, then publish the manifest with ``os.link`` (hard-link
 then unlink), which FAILS if the version already exists — two racing
 writers can both stage, but only one publishes; the loser gets
@@ -30,7 +33,10 @@ atomic, and manifests are staged write-fsync-rename so a torn JSON is
 never visible under ``_txlog``.
 
 Scale posture: commits are O(1) driver-side metadata (one small JSON);
-data stays distributed parquet with normal pushdown/pruning. The
+data stays distributed parquet with normal pushdown/pruning. Planning a
+read costs one manifest parse and no footer-inference job, so a MERGE,
+a snapshot read and an OPTIMIZE each run one Spark job fewer than a
+schema-less ``spark.read.parquet`` of the same files would. The
 full-snapshot manifest (vs delta's add/remove log) trades O(files)
 manifest size for zero log-replay cost — right up to manifests of ~1e5
 files; beyond that a real format's checkpointed delta log wins, which
@@ -49,6 +55,7 @@ import tempfile
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 
 class CommitConflict(RuntimeError):
@@ -150,16 +157,19 @@ def read_snapshot(
     spark: SparkSession, path: str, version: int | None = None
 ) -> DataFrame:
     """Read the table at ``version`` (default: latest). Time travel is
-    free: every manifest is a full snapshot."""
+    free: every manifest is a full snapshot. The DataFrame is planned
+    from the manifest's schema, so building it starts no Spark job; the
+    first action scans only the files the manifest names."""
     v = current_version(path) if version is None else version
     if v is None:
         raise FileNotFoundError(f"no committed version at {path}")
     m = _read_manifest(path, v)
+    schema = StructType.fromJson(m["schema"])
     if not m["files"]:
-        from pyspark.sql import types as T
-
-        return spark.createDataFrame([], T.StructType.fromJson(m["schema"]))
-    return spark.read.parquet(*[os.path.join(path, f) for f in m["files"]])
+        return spark.createDataFrame([], schema)
+    return spark.read.schema(schema).parquet(
+        *[os.path.join(path, f) for f in m["files"]]
+    )
 
 
 def merge_upsert_tx(
@@ -241,11 +251,16 @@ def vacuum(path: str, keep_versions: int = 1) -> list[str]:
     units, so liveness is decided per-dir — a dir is live iff some
     manifest references a file inside it; within a live dir every
     parquet is referenced by construction (writer sidecars like
-    _SUCCESS ride along untouched). Returns deleted parquet paths."""
+    _SUCCESS ride along untouched). Returns deleted parquet paths.
+
+    ``keep_versions`` must be at least 1: keeping no manifest would
+    leave nothing referenced and delete every data file."""
     import shutil
 
+    if keep_versions < 1:
+        raise ValueError(f"keep_versions must be >= 1, got {keep_versions}")
     vs = _versions(path)
-    for v in vs[:-keep_versions] if keep_versions else vs:
+    for v in vs[:-keep_versions]:
         os.unlink(_manifest_path(path, v))
     live_dirs = {os.path.dirname(f) for f in referenced_files(path)}
     deleted: list[str] = []

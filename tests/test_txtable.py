@@ -4,6 +4,7 @@ concurrency, crash invisibility, time travel, vacuum."""
 from __future__ import annotations
 
 import os
+import uuid
 
 import pytest
 from pyspark.sql import functions as F
@@ -81,6 +82,51 @@ def test_merge_upsert_tx_roundtrip(spark, tmp_path):
     assert {r["k"] for r in txtable.read_snapshot(spark, path).collect()} == {
         1, 2, 3, 4,
     }
+
+
+def test_read_snapshot_plans_from_manifest(spark, tmp_path):
+    """Building a snapshot starts no Spark job (the schema comes from
+    the manifest, not a footer-inference job), and the planned schema
+    equals the one Spark infers from the data files."""
+    path = str(tmp_path / "t")
+    df = spark.range(20).select(
+        F.col("id").alias("k"),
+        F.struct(F.col("id").alias("a"), F.lit("x").alias("b")).alias("s"),
+        F.array(F.col("id"), F.lit(7).cast("long")).alias("arr"),
+    )
+    assert not df.schema["k"].nullable  # a non-nullable source
+    txtable.commit(spark, path, df, "create", None)
+    snap0 = txtable.read_snapshot(spark, path, 0)
+    txtable.commit(spark, path, snap0.unionByName(df), "append", 0)
+
+    sc = spark.sparkContext
+    group = f"read_snapshot_{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "read_snapshot builds without a job")
+    try:
+        latest = txtable.read_snapshot(spark, path)
+        first = txtable.read_snapshot(spark, path, version=0)
+    finally:
+        sc.setJobGroup("", "")
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+
+    for v, snap in ((1, latest), (0, first)):
+        files = [
+            os.path.join(path, f) for f in txtable._read_manifest(path, v)["files"]
+        ]
+        assert snap.schema == spark.read.parquet(*files).schema
+    assert latest.count() == 40 and first.count() == 20
+
+
+def test_vacuum_refuses_to_keep_no_versions(spark, tmp_path):
+    path = str(tmp_path / "t")
+    txtable.commit(spark, path, _mk(spark, 6, "a"), "create", None)
+    txtable.merge_upsert_tx(spark, path, _mk(spark, 3, "b"), ["k"])
+    with pytest.raises(ValueError, match="keep_versions"):
+        txtable.vacuum(path, keep_versions=0)
+    # nothing was deleted: every manifest and data file is still there
+    assert txtable._versions(path) == [0, 1]
+    assert txtable.read_snapshot(spark, path).count() == 6
+    assert txtable.read_snapshot(spark, path, 0).count() == 6
 
 
 def test_optimize_compacts_transactionally(spark, tmp_path):
